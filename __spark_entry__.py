@@ -11,6 +11,7 @@ oracle_sql()   — DuckDB-equivalent SQL per query (omitted only for
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,13 +23,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.sparkContext.addPyFile  # ship package for foreign drivers
-        from sprintz_spark.session import package_zip
-
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass
+    _ship(spark)
     from sprintz_spark.operators import rollup as R
     from sprintz_spark.operators.encode import decode_series, encode_series
     from sprintz_spark.sources.pages import generate_pages
@@ -49,13 +44,22 @@ def _ensure_shipped(spark: SparkSession) -> None:
     the driver may call queries() with its own session from any cwd."""
     if getattr(spark, "_sprintz_shipped", False):
         return
+    _ship(spark)
+    spark._sprintz_shipped = True
+
+
+def _ship(spark: SparkSession) -> None:
+    """addPyFile the package zip; a failure (e.g. a session without a
+    SparkContext) is logged, and executors must then find the package on
+    their own path."""
     try:
         from sprintz_spark.session import package_zip
 
         spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass
-    spark._sprintz_shipped = True
+    except Exception as e:
+        logging.getLogger("sprintz_spark").warning(
+            "could not ship the sprintz_spark package to executors: %r", e
+        )
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

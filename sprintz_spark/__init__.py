@@ -18,3 +18,9 @@ Design notes (Spark-first, not a port):
 """
 
 __version__ = "0.1.0"
+
+from sprintz_spark import _zipstat
+
+# every engine UDF imports this package inside its Python worker, so each
+# reused worker stops re-reading Spark's zip archives at every task start
+_zipstat.install()

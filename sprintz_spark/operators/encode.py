@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    BooleanType,
     DoubleType,
     LongType,
     StringType,
@@ -509,26 +508,34 @@ def decode_series(
     zero-copy, so the Python boundary carries only the blob bytes in and
     Arrow buffers out."""
     import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DataType
 
     key_cols = list(key_cols)
     value_cols = list(value_cols)
     key_fields = [enc.schema[k] for k in key_cols]
-    _named = {"long": LongType(), "double": DoubleType(),
-              "boolean": BooleanType()}
     vt = {
-        c: (_named[t] if isinstance(t, str) else t)
+        c: (DataType.fromDDL(t) if isinstance(t, str) else t)
         for c, t in (value_types or {}).items()
     }
     fields = key_fields + [StructField(ts_col, TimestampType())]
     fields += [StructField(c, vt.get(c, LongType())) for c in value_cols]
     schema = StructType(fields)
-    tz = enc.sparkSession.conf.get("spark.sql.session.timeZone") or "UTC"
-    _arrow_named = {"long": pa.int64(), "double": pa.float64(),
-                    "boolean": pa.bool_()}
-    val_arrow = {
-        c: _arrow_named[vt.get(c, LongType()).typeName()] for c in value_cols
-    }
+    val_arrow = {c: to_arrow_type(vt.get(c, LongType())) for c in value_cols}
     names = key_cols + [ts_col] + value_cols
+    # the encoder saw session-local wall-clock micros (applyInPandas hands
+    # pandas tz-naive local timestamps); Arrow reads a tz'd cast as UTC, so
+    # a non-UTC session must localize them. ``latest`` resolves a repeated
+    # fall-back hour the way PySpark's own pandas->Arrow conversion does.
+    tz = enc.sparkSession.conf.get("spark.sql.session.timeZone") or "UTC"
+    if tz == "UTC":
+        def to_ts(micros):
+            return pa.array(micros).cast(pa.timestamp("us", tz="UTC"))
+    else:
+        def to_ts(micros):
+            local = pa.array(micros).cast(pa.timestamp("us"))
+            return pc.assume_timezone(local, tz, ambiguous="latest")
 
     def dec(batches):
         for b in batches:
@@ -548,9 +555,7 @@ def decode_series(
             )
             idx = pa.array(np.repeat(np.arange(n_rows, dtype=np.int64), ns))
             arrays = [col[k].take(idx) for k in key_cols]
-            arrays.append(
-                pa.array(ts_concat).cast(pa.timestamp("us", tz=tz))
-            )
+            arrays.append(to_ts(ts_concat))
             for c in value_cols:
                 vals = decode_value_columns_batch(
                     col[f"blob_{c}"].to_pylist(), [m[c] for m in metas]

@@ -24,6 +24,7 @@ cascade encodes each tier from the materialized finer tier (1m parquet →
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 import time
@@ -39,6 +40,8 @@ from sprintz_spark.operators.encode import (
     encode_series,
     encode_series_container,
 )
+
+log = logging.getLogger(__name__)
 
 MEASURES = ["crawl_count", "byte_size_sum", "byte_size_max", "byte_size_min"]
 
@@ -370,20 +373,24 @@ def _is_container_store(spark: SparkSession, path: str) -> bool:
     resolve costs ~70 ms of driver planning per call (r10 measurement:
     6 calls = 0.44 s of a 3.4 s compact); a driver-side pyarrow footer
     read answers the same question in ~1 ms when the store is on a local
-    filesystem. Non-local stores (no globbable files) fall back to the
-    spark.read resolve."""
+    filesystem. Paths with a ``_``/``.``-prefixed component (Spark's
+    ``_temporary`` attempt dirs, ``.crc`` side files) are not data, as for
+    Spark's own reader. Non-local stores (no such file found) fall back
+    to the spark.read resolve."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    local = path[len("file:"):] if path.startswith("file:") else path
     try:
-        import glob
-
-        import pyarrow.parquet as pq
-
-        local = path[len("file:"):] if path.startswith("file:") else path
-        for f in glob.iglob(
-            os.path.join(local, "**", "*.parquet"), recursive=True
-        ):
-            return "keys" in pq.ParquetFile(f).schema_arrow.names
-    except Exception:
-        pass
+        for root, dirs, files in os.walk(local):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for f in files:
+                if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                    names = pq.ParquetFile(os.path.join(root, f)).schema_arrow.names
+                    return "keys" in names
+        log.info("no local parquet file under %s; sniffing via spark.read", path)
+    except (OSError, pa.ArrowException) as e:
+        log.warning("footer sniff of %s failed (%r); sniffing via spark.read", path, e)
     return "keys" in spark.read.parquet(path).columns
 
 

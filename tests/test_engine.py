@@ -320,3 +320,16 @@ spark.stop()
     lines = [l for l in res.stdout.splitlines() if l.startswith("{")]
     assert lines, f"no JSON line; stderr tail: {res.stderr[-2000:]}"
     assert _json.loads(lines[-1])["rows"] > 0
+
+
+def test_package_ship_failure_is_logged(caplog):
+    import __spark_entry__ as E
+
+    class NoContext:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("no SparkContext here")
+
+    with caplog.at_level("WARNING", logger="sprintz_spark"):
+        E._ensure_shipped(NoContext())
+    assert any("no SparkContext here" in r.getMessage() for r in caplog.records)

@@ -352,3 +352,39 @@ def test_expire_tier_dry_run_never_mutates_interrupted_store(spark, pages_small,
     # a real run still heals
     RT.expire_tier(spark, out, "s1", "1h", cut)
     assert os.path.exists(enc) and not os.path.exists(enc + ".expiring")
+
+
+def _tier_with_stale_attempt(root):
+    """A container-format tier dir (``keys`` column) beside a stale
+    ``_temporary`` attempt file in the per-series format (no ``keys``)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tier = root / "encoded_tier=1m"
+    (tier / "part=0").mkdir(parents=True)
+    (tier / "_temporary" / "0").mkdir(parents=True)
+    pq.write_table(
+        pa.table({"keys": [["u"]], "n": [1]}), tier / "part=0" / "part-00000.parquet"
+    )
+    pq.write_table(
+        pa.table({"url": ["u"], "n": [1]}),
+        tier / "_temporary" / "0" / "part-00000.parquet",
+    )
+    return str(tier)
+
+
+def test_container_sniff_skips_temporary_dirs(spark, tmp_path):
+    assert RT._is_container_store(spark, _tier_with_stale_attempt(tmp_path))
+
+
+def test_container_sniff_logs_its_fallback(spark, tmp_path, monkeypatch, caplog):
+    import pyarrow.parquet as pq
+
+    def unreadable(path):
+        raise OSError("footer unreadable")
+
+    tier = _tier_with_stale_attempt(tmp_path)
+    monkeypatch.setattr(pq, "ParquetFile", unreadable)
+    with caplog.at_level("WARNING", logger="sprintz_spark"):
+        assert RT._is_container_store(spark, tier)
+    assert any("footer unreadable" in r.getMessage() for r in caplog.records)
