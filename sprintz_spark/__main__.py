@@ -87,9 +87,10 @@ def cmd_verify(args) -> dict:
     from pyspark.sql import functions as F
 
     from sprintz_spark.plans.jobs import verify_encoded
+    from sprintz_spark.sources.io import read_table
 
     spark = _spark(args)
-    enc = spark.read.parquet(args.enc)
+    enc = read_table(spark, args.enc, fmt="parquet")
     # verify_encoded raises inside the tasks on any CRC mismatch, failing
     # the job loudly — reaching the aggregate means every blob round-trips
     rep = verify_encoded(enc).agg(

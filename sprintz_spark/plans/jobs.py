@@ -437,8 +437,9 @@ def verify_encoded(enc: DataFrame) -> DataFrame:
     encode→decode→verify harness, python/dfsqueeze.py:133-231, as a narrow
     Spark stage): decode every blob of every chunk and check it against
     the crc32 of the raw values captured at encode time. Returns one row
-    per (tier, part) with chunk/row counts; raises inside the task on any
-    mismatch, failing the job loudly.
+    per (tier, part) with chunk/row counts; raises a ValueError naming the
+    column and the chunk (tier, part, url, chunk) inside the task on any
+    length or crc mismatch, failing the job loudly.
 
     No shuffle: mapInPandas straight over the encoded rows.
     """
@@ -449,6 +450,11 @@ def verify_encoded(enc: DataFrame) -> DataFrame:
 
     schema = "tier string, part long, n_chunks long, n_rows long, n_cols_checked long"
 
+    # ValueError, not assert: the gate must also hold under python -O
+    def mismatch(pdf, i, col, err):
+        key = ", ".join(f"{c}={pdf[c].iat[i]}" for c in ("tier", "part", "url", "chunk"))
+        return ValueError(f"{col}: {err} in chunk ({key})")
+
     def gen(it):
         for pdf in it:
             if not len(pdf):
@@ -458,10 +464,12 @@ def verify_encoded(enc: DataFrame) -> DataFrame:
             checked = np.zeros(len(pdf), dtype=np.int64)
             ts_arrays = szc.decode_batch(list(pdf["ts_blob"]))
             for i, (arr, meta, n) in enumerate(zip(ts_arrays, metas, ns)):
-                assert len(arr) == n, "ts length mismatch"
+                if len(arr) != n:
+                    raise mismatch(pdf, i, "ts", f"decoded {len(arr)} values, expected {n}")
                 crc = meta.get("crc", {}).get("ts")
                 if crc is not None:
-                    assert zlib.crc32(arr.view(np.int64).tobytes()) == crc, "ts crc mismatch"
+                    if zlib.crc32(arr.view(np.int64).tobytes()) != crc:
+                        raise mismatch(pdf, i, "ts", "crc32 mismatch")
                     checked[i] += 1
             for m in MEASURES:
                 vals = decode_value_columns_batch(
@@ -469,10 +477,12 @@ def verify_encoded(enc: DataFrame) -> DataFrame:
                 )
                 for i, (v, meta, n) in enumerate(zip(vals, metas, ns)):
                     arr = np.asarray(v).astype(np.int64, copy=False)
-                    assert len(arr) == n, f"{m} length mismatch"
+                    if len(arr) != n:
+                        raise mismatch(pdf, i, m, f"decoded {len(arr)} values, expected {n}")
                     crc = meta.get("crc", {}).get(m)
                     if crc is not None:
-                        assert zlib.crc32(arr.tobytes()) == crc, f"{m} crc mismatch"
+                        if zlib.crc32(arr.tobytes()) != crc:
+                            raise mismatch(pdf, i, m, "crc32 mismatch")
                         checked[i] += 1
             stats = pd.DataFrame(
                 {

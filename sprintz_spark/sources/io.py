@@ -13,9 +13,20 @@ columnar inside row groups), so tables are whole DataFrames.
 
 from __future__ import annotations
 
+import json
+import logging
 import os
+from collections.abc import Sequence
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+log = logging.getLogger(__name__)
+
+# footer key under which Spark's parquet writer stores the exact Catalyst
+# schema of the rows (ParquetReadSupport.SPARK_METADATA_KEY)
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 _EXT_FMT = {
     ".parquet": "parquet",
@@ -35,26 +46,101 @@ def _infer_fmt(path: str, fmt: str | None) -> str:
     return "parquet"
 
 
+def _first_data_file(path: str) -> str | None:
+    """First data file of a local parquet file or directory, in sorted
+    order. Components with a ``_``/``.`` prefix (``_temporary`` attempt
+    dirs, ``_SUCCESS``, ``.crc`` side files) are not data, as for Spark's
+    own file index."""
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return None
+
+
+def footer_schema(paths: Sequence[str]) -> StructType | None:
+    """The schema Spark wrote into the footers of the local parquet stores
+    ``paths``, read with pyarrow from the first data file of each; None
+    (with the reason logged) when Spark has to infer it instead: a path
+    is not local or holds no data file, or a footer cannot be read, has
+    no Spark schema (a pyarrow- or DuckDB-written file) or differs from
+    another path's. Spark's own inference without ``mergeSchema`` reads
+    the same key from one file, so both give the same schema (``read_table``
+    infers whenever ``spark.sql.parquet.mergeSchema`` is on)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    found = set()
+    for p in paths:
+        url = urlparse(p)
+        if url.scheme not in ("", "file"):
+            log.info("%s is not a local path; Spark infers its schema", p)
+            return None
+        f = _first_data_file(url.path if url.scheme else p)
+        if f is None:
+            log.info("no local data file under %s; Spark infers its schema", p)
+            return None
+        try:
+            with pq.ParquetFile(f) as pf:
+                js = (pf.metadata.metadata or {}).get(SPARK_SCHEMA_KEY)
+        except (OSError, pa.ArrowException) as e:
+            log.warning("footer read of %s failed (%r); Spark infers its schema", f, e)
+            return None
+        if js is None:
+            log.info("%s has no Spark schema in its footer; Spark infers it", f)
+            return None
+        found.add(js)
+    if len(found) > 1:
+        log.info("footer schemas of %s differ; Spark infers the schema", list(paths))
+        return None
+    return StructType.fromJson(json.loads(found.pop()))
+
+
 def read_table(
-    spark: SparkSession, path: str, fmt: str | None = None, schema=None
+    spark: SparkSession,
+    path: str | Sequence[str],
+    fmt: str | None = None,
+    schema=None,
+    base_path: str | None = None,
+    footer: bool = True,
 ) -> DataFrame:
-    """Format-dispatched scan (csv reads get header+schema inference unless
-    an explicit schema pins the types)."""
-    fmt = _infer_fmt(path, fmt)
+    """Format-dispatched scan of one path or several (``base_path`` is
+    Spark's ``basePath`` for partition discovery). Csv reads get
+    header+schema inference unless an explicit schema pins the types.
+
+    A parquet read with no schema takes it from the files' footers
+    (``footer_schema``): a bare ``spark.read.parquet`` runs a one-task
+    Spark job to read a footer on every call. The footer is read on every
+    call, so a rewritten store is never read with a stale schema. Spark
+    infers the schema, as a bare read does, when ``footer`` is False or
+    ``spark.sql.parquet.mergeSchema`` is on (a merged schema can hold
+    columns that the first file lacks)."""
+    paths = [path] if isinstance(path, str) else list(path)
+    fmt = _infer_fmt(paths[0], fmt)
     reader = spark.read
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    if schema is None and fmt == "parquet" and footer:
+        if spark.conf.get("spark.sql.parquet.mergeSchema", "false").strip().lower() == "true":
+            log.info("spark.sql.parquet.mergeSchema is on; Spark infers the schema of %s", paths)
+        else:
+            schema = footer_schema(paths)
     if schema is not None:
         reader = reader.schema(schema)
     if fmt == "csv":
         return reader.options(
             header=True, **({} if schema is not None else {"inferSchema": True})
-        ).csv(path)
+        ).csv(paths)
     if fmt == "json":
-        return reader.json(path)
+        return reader.json(paths)
     if fmt == "npy":
-        return read_npy(spark, path)
+        return read_npy(spark, paths[0])
     if fmt == "feather":
-        return read_feather(spark, path)
-    return reader.parquet(path)
+        return read_feather(spark, paths[0])
+    return reader.parquet(*paths)
 
 
 def write_table(

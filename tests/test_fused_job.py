@@ -96,3 +96,49 @@ def test_fused_fire_actually_uses_fire(spark, pages_small):
         1 for m in metas for c, v in m.items() if c != "ts" and v.get("mode") == "fire"
     )
     assert fire_cols > 0
+
+
+@pytest.fixture(scope="module")
+def fused_store(spark, pages_small, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("fused") / "enc")
+    fused_rollup_encode(pages_small, codec="fire", n_parts=4).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_verify_encoded_checks_every_column(fused_store):
+    from pyspark.sql import functions as F
+
+    from sprintz_spark.plans.jobs import verify_encoded
+
+    rep = verify_encoded(fused_store).toPandas()
+    # ts + four measures, each with a crc, in every chunk
+    assert (rep["n_cols_checked"] == 5 * rep["n_chunks"]).all()
+    assert rep["n_chunks"].sum() == fused_store.count()
+    assert rep["n_rows"].sum() == fused_store.agg(F.sum("n")).first()[0]
+
+
+def test_verify_encoded_names_the_corrupt_chunk(fused_store):
+    """One byte flipped in the middle of the longest byte_size_sum blob
+    must fail the job with a ValueError naming the column and the chunk
+    (an assert would vanish under python -O)."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from sprintz_spark.plans.jobs import verify_encoded
+
+    key = ["tier", "part", "url", "chunk"]
+    blob = "blob_byte_size_sum"
+    row = fused_store.orderBy(F.length(blob).desc(), *key).select(*key, blob).first()
+    b = bytearray(row[blob])
+    b[len(b) // 2] ^= 0xFF
+    hit = reduce(lambda x, y: x & y, [F.col(c) == F.lit(row[c]) for c in key])
+    bad = fused_store.withColumn(
+        blob, F.when(hit, F.lit(bytes(b))).otherwise(F.col(blob))
+    )
+    with pytest.raises(Exception) as err:
+        verify_encoded(bad).collect()
+    msg = str(err.value)
+    assert "ValueError: byte_size_sum:" in msg
+    chunk = ", ".join(f"{c}={row[c]}" for c in key)
+    assert f"in chunk ({chunk})" in msg

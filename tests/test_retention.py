@@ -7,6 +7,7 @@ import os
 import shutil
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from sprintz_spark.operators.encode import decode_series
@@ -387,4 +388,24 @@ def test_container_sniff_logs_its_fallback(spark, tmp_path, monkeypatch, caplog)
     monkeypatch.setattr(pq, "ParquetFile", unreadable)
     with caplog.at_level("WARNING", logger="sprintz_spark"):
         assert RT._is_container_store(spark, tier)
-    assert any("footer unreadable" in r.getMessage() for r in caplog.records)
+    # the footer is read (and its failure logged) once, not again by the fallback
+    assert sum("footer unreadable" in r.getMessage() for r in caplog.records) == 1
+
+
+def test_read_manifest_raises_on_a_corrupt_manifest(spark, tmp_path):
+    man = tmp_path / "manifest"
+    man.mkdir()
+    (man / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        RT.read_manifest(spark, str(tmp_path))
+
+
+def test_read_manifest_without_data_is_none_and_logged(spark, tmp_path, caplog):
+    (tmp_path / "manifest").mkdir()
+    (tmp_path / "manifest" / "_SUCCESS").write_bytes(b"")
+    with caplog.at_level("WARNING", logger="sprintz_spark"):
+        assert RT.read_manifest(spark, str(tmp_path)) is None
+        assert RT.read_manifest(spark, str(tmp_path / "nothing")) is None
+    msgs = [r.getMessage() for r in caplog.records if r.levelname == "WARNING"]
+    assert any(str(tmp_path / "manifest") in m and "UNABLE_TO_INFER_SCHEMA" in m for m in msgs)
+    assert any(str(tmp_path / "nothing") in m for m in msgs)
