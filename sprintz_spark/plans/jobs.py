@@ -9,8 +9,11 @@ Shape (the 100 TB design):
                  sort once by (url, ts)
                  for each tier: bucket-truncate (pure epoch arithmetic,
                  UTC), group boundaries by (url, bucket) change points,
-                 aggregate with np.*.reduceat, then encode the per-url
-                 series with the batched sprintz kernels
+                 aggregate with np.*.reduceat, cut each per-url series
+                 into chunk pieces
+                 then encode every tier's pieces at once: one batched
+                 sprintz kernel call per codec/width for the partition
+                 (bucket timestamps; 4 measures x all tiers)
           ──> one output row per (tier, url, chunk) with binary blobs
 
 One wide job, one shuffle, no intermediate materialization. Compared to
@@ -26,6 +29,7 @@ from __future__ import annotations
 
 import json
 import time
+import zlib
 
 import numpy as np
 import pandas as pd
@@ -84,7 +88,10 @@ _COLS_ID = [f.name for f in _SCHEMA_ID.fields]
 
 
 def _encode_measure(vals, piece_starts, piece_lens, codec, deflate=False):
-    """Encode one measure column cut into pieces; returns (blobs, metas).
+    """Encode measure columns cut into pieces that tile ``vals``; returns
+    (blobs, metas), each meta a JSON fragment — hand-assembled (keys are
+    fixed identifiers, values ints) because json.dumps on 30k tiny dicts
+    per partition was ~10% of UDF wall.
 
     For codec='fire': per-piece offset quantization to the narrowest of
     u8/u16 via reduceat min/max; pieces whose span exceeds u16 fall back
@@ -93,13 +100,10 @@ def _encode_measure(vals, piece_starts, piece_lens, codec, deflate=False):
     'fastest setting' (results.tex:168): deflate post-pass off by default;
     the modular retention path is the 'max-ratio setting' (deflate on)."""
     n_pieces = len(piece_starts)
+    int64_meta = '{"codec": "sprintz", "mode": "%s", "np_dtype": "int64"}'
     if codec != "fire":
         blobs = sz.encode_batch_concat(vals, piece_lens, None, deflate)
-        metas = [
-            {"codec": "sprintz", "mode": sz.blob_mode(b), "np_dtype": "int64"}
-            for b in blobs
-        ]
-        return blobs, metas
+        return blobs, [int64_meta % sz.blob_mode(b) for b in blobs]
     idx = np.minimum(piece_starts, max(len(vals) - 1, 0))
     mins = np.minimum.reduceat(vals, idx) if len(vals) else np.zeros(n_pieces, np.int64)
     maxs = np.maximum.reduceat(vals, idx) if len(vals) else np.zeros(n_pieces, np.int64)
@@ -127,36 +131,19 @@ def _encode_measure(vals, piece_starts, piece_lens, codec, deflate=False):
             bl = sz.encode_batch_concat(sub, lens_w, None, deflate)
             for j, i in enumerate(sel):
                 blobs[i] = bl[j]
-                metas[i] = {
-                    "codec": "sprintz",
-                    "mode": sz.blob_mode(bl[j]),
-                    "np_dtype": "int64",
-                }
+                metas[i] = int64_meta % sz.blob_mode(bl[j])
         else:
             offs = np.repeat(mins[sel], lens_w)
             q = (sub - offs).astype(dt)
             bl = sz.encode_batch_concat_fire(q, lens_w, deflate)
+            fire_meta = (
+                '{"codec": "sprintz", "mode": "fire", "np_dtype": "uint%d", "offset": %%d}'
+                % w
+            )
             for j, i in enumerate(sel):
                 blobs[i] = bl[j]
-                metas[i] = {
-                    "codec": "sprintz",
-                    "mode": "fire",
-                    "np_dtype": f"uint{w}",
-                    "offset": int(mins[i]),
-                }
+                metas[i] = fire_meta % mins[i]
     return blobs, metas
-
-
-def _meta_frag(m: dict) -> str:
-    """JSON fragment for one measure meta — hand-assembled (json.loads-
-    compatible; keys are fixed identifiers, values ints) because
-    json.dumps on 30k tiny dicts per partition was ~10% of UDF wall."""
-    if "offset" in m:
-        return (
-            '{"codec": "sprintz", "mode": "fire", "np_dtype": "%s", "offset": %d}'
-            % (m["np_dtype"], m["offset"])
-        )
-    return '{"codec": "sprintz", "mode": "%s", "np_dtype": "int64"}' % m["mode"]
 
 
 def _segment(url_arr, bucket_arr):
@@ -167,6 +154,135 @@ def _segment(url_arr, bucket_arr):
     change[1:] = (url_arr[1:] != url_arr[:-1]) | (bucket_arr[1:] != bucket_arr[:-1])
     starts = np.flatnonzero(change)
     return starts
+
+
+def _encode_part(pdf, tiers, codec, chunk_rows, with_crc, shuffle_ids):
+    """The fused job's per-part body: every row of a part's urls in, one
+    row per (tier, url, chunk) out, tier-major.
+
+    Every tier's groups and pieces are computed first and stacked, so the
+    whole part takes one doubledelta call for the bucket timestamps and
+    one ``_encode_measure`` call for the 4 measures x all tiers (one
+    kernel call per codec width). The kernels' per-call fixed cost, not
+    their per-value work, dominates at a part's size, and a piece's blob
+    does not depend on what else is in its batch."""
+    t0 = time.perf_counter()
+    url_col = "url_id" if shuffle_ids else "url"
+    out_cols = _COLS_ID if shuffle_ids else _COLS
+    if not len(pdf):
+        return pd.DataFrame(columns=out_cols)
+    # group by url via integer codes + lexsort instead of a string
+    # mergesort: ~3x less CPU and far less memory traffic per row in
+    # the bandwidth-critical leg. Grouping order becomes
+    # first-appearance (arbitrary), which is fine — chunk CONTENT is
+    # per-url ts-sorted either way and all bucket aggregates are
+    # order-independent integer ops.
+    if shuffle_ids:
+        url_codes = pdf["url_id"].to_numpy()
+    else:
+        url_codes = pd.factorize(pdf["url"].to_numpy(), sort=False)[0]
+    ts_us = pdf["warc_ts"].astype("datetime64[us]").to_numpy().view(np.int64)
+    order = np.lexsort((ts_us, url_codes))
+    url_codes = url_codes[order]
+    ts_us = ts_us[order]
+    url_arr = url_codes if shuffle_ids else pdf["url"].to_numpy()[order]
+    nbytes = pdf["nbytes"].to_numpy()[order]
+    ones = np.ones(len(pdf), dtype=np.int64)
+    # per tier: (url, bucket) groups and their pieces (per-url series cut
+    # into chunks of chunk_rows), piece starts offset into the stacked
+    # group arrays
+    buckets, aggs, urls, starts, lens, ords, n_tier = [], [], [], [], [], [], []
+    g_off = 0
+    for tier in tiers:
+        step = TIER_US[tier]
+        bucket = ts_us - ts_us % step
+        g_starts = _segment(url_codes, bucket)
+        aggs.append(
+            (
+                np.add.reduceat(ones, g_starts),
+                np.add.reduceat(nbytes, g_starts),
+                np.maximum.reduceat(nbytes, g_starts),
+                np.minimum.reduceat(nbytes, g_starts),
+            )
+        )
+        g_codes = url_codes[g_starts]
+        s_change = np.zeros(len(g_starts), dtype=bool)
+        s_change[0] = True
+        s_change[1:] = g_codes[1:] != g_codes[:-1]
+        s_starts = np.flatnonzero(s_change)
+        s_lens = np.diff(np.append(s_starts, len(g_starts)))
+        reps = (s_lens + chunk_rows - 1) // chunk_rows
+        p_series = np.repeat(np.arange(len(s_starts)), reps)
+        p_ord = np.arange(int(reps.sum()), dtype=np.int64) - np.repeat(
+            np.concatenate([[0], np.cumsum(reps)[:-1]]), reps
+        )
+        p_starts = s_starts[p_series] + p_ord * chunk_rows
+        buckets.append(bucket[g_starts])
+        urls.append(url_arr[g_starts][p_starts])
+        starts.append(g_off + p_starts)
+        lens.append(np.minimum(chunk_rows, s_lens[p_series] - p_ord * chunk_rows))
+        ords.append(p_ord)
+        n_tier.append(len(p_starts))
+        g_off += len(g_starts)
+    g_bucket = np.concatenate(buckets)
+    p_starts = np.concatenate(starts)
+    p_lens = np.concatenate(lens)
+    n_pieces = len(p_starts)
+    # measure-major stack: measure m of every tier, then measure m+1
+    meas = [np.concatenate([a[m] for a in aggs]) for m in range(len(MEASURES))]
+    ts_blobs = sz.encode_batch_concat(g_bucket, p_lens, "doubledelta", False)
+    blobs, frags = _encode_measure(
+        np.concatenate(meas),
+        np.concatenate([p_starts + m * g_off for m in range(len(MEASURES))]),
+        np.tile(p_lens, len(MEASURES)),
+        codec,
+    )
+    comps = np.fromiter(map(len, ts_blobs), np.int64, n_pieces) + np.fromiter(
+        map(len, blobs), np.int64, len(blobs)
+    ).reshape(len(MEASURES), n_pieces).sum(axis=0)
+    ends = p_starts + p_lens
+    crc_frags = [""] * n_pieces
+    if with_crc:
+        cnt, bsum, bmax, bmin = meas
+        for i in range(n_pieces):
+            sl = slice(p_starts[i], ends[i])
+            crc_frags[i] = (
+                ', "crc": {"ts": %d, "crawl_count": %d, "byte_size_sum": %d,'
+                ' "byte_size_max": %d, "byte_size_min": %d}'
+                % (
+                    zlib.crc32(g_bucket[sl].tobytes()),
+                    zlib.crc32(cnt[sl].tobytes()),
+                    zlib.crc32(bsum[sl].tobytes()),
+                    zlib.crc32(bmax[sl].tobytes()),
+                    zlib.crc32(bmin[sl].tobytes()),
+                )
+            )
+    cols = {
+        "tier": np.repeat(np.array(tiers, dtype=object), n_tier),
+        "part": int(pdf["part"].iloc[0]),
+        url_col: np.concatenate(urls),
+        "chunk": np.concatenate(ords),
+        "start_bucket": g_bucket[p_starts].view("datetime64[us]"),
+        "end_bucket": g_bucket[ends - 1].view("datetime64[us]"),
+        "n": p_lens,
+        "ts_blob": ts_blobs,
+        "meta": [
+            '{"ts": {"codec": "sprintz", "mode": "doubledelta"}%s,'
+            ' "crawl_count": %s, "byte_size_sum": %s, "byte_size_max": %s,'
+            ' "byte_size_min": %s}'
+            % (
+                crc_frags[i], frags[i], frags[i + n_pieces],
+                frags[i + 2 * n_pieces], frags[i + 3 * n_pieces],
+            )
+            for i in range(n_pieces)
+        ],
+        "raw_bytes": p_lens * 8 * (1 + len(MEASURES)),
+        "comp_bytes": comps,
+    }
+    for m, name in enumerate(MEASURES):
+        cols[f"blob_{name}"] = blobs[m * n_pieces : (m + 1) * n_pieces]
+    cols["encode_secs"] = (time.perf_counter() - t0) / n_pieces
+    return pd.DataFrame(cols, columns=out_cols)
 
 
 SILVER_COLUMNS = "url string, warc_ts timestamp, nbytes bigint, text_hash bigint, part bigint"
@@ -252,7 +368,12 @@ def fused_rollup_encode(
     with_crc: bool = True,
     shuffle_ids: bool = False,
 ) -> DataFrame:
-    """``with_crc`` stores a crc32 of each piece's raw values in the meta
+    """Derive ``tiers`` and encode them in one ``applyInPandas`` over
+    ``part``; each group runs ``_encode_part``, which computes every
+    tier's groups and pieces first and then encodes the whole part with
+    one batched kernel call per codec/width.
+
+    ``with_crc`` stores a crc32 of each piece's raw values in the meta
     so verify_encoded can prove decode(encode(x)) == x without the
     original table.
 
@@ -271,120 +392,13 @@ def fused_rollup_encode(
     sharing an xxhash64 value (P ~ n^2/2^65, ~1e-8 at 10^6 urls) would
     merge their series; callers needing certainty at 10^10+ urls should
     verify with the modular retention path."""
-    import zlib
-
     if codec not in ("auto", "fire"):
         raise ValueError(f"unknown codec {codec!r}: use 'auto' or 'fire'")
     spark = pages.sparkSession
     n_parts = n_parts or spark.sparkContext.defaultParallelism * 2
-    out_cols = _COLS_ID if shuffle_ids else _COLS
 
     def udf(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.perf_counter()
-        if not len(pdf):
-            return pd.DataFrame(columns=out_cols)
-        # group by url via integer codes + lexsort instead of a string
-        # mergesort: ~3x less CPU and far less memory traffic per row in
-        # the bandwidth-critical leg. Grouping order becomes
-        # first-appearance (arbitrary), which is fine — chunk CONTENT is
-        # per-url ts-sorted either way and all bucket aggregates are
-        # order-independent integer ops.
-        if shuffle_ids:
-            url_codes = pdf["url_id"].to_numpy()
-        else:
-            url_codes = pd.factorize(pdf["url"].to_numpy(), sort=False)[0]
-        ts_us = pdf["warc_ts"].astype("datetime64[us]").to_numpy().view(np.int64)
-        order = np.lexsort((ts_us, url_codes))
-        url_codes = url_codes[order]
-        ts_us = ts_us[order]
-        url_arr = url_codes if shuffle_ids else pdf["url"].to_numpy()[order]
-        nbytes = pdf["nbytes"].to_numpy()[order]
-        part = int(pdf["part"].iloc[0])
-        ones = np.ones(len(pdf), dtype=np.int64)
-        frames = []
-        for tier in tiers:
-            step = TIER_US[tier]
-            bucket = ts_us - ts_us % step
-            g_starts = _segment(url_codes, bucket)
-            counts = np.add.reduceat(ones, g_starts)
-            sums = np.add.reduceat(nbytes, g_starts)
-            maxs = np.maximum.reduceat(nbytes, g_starts)
-            mins = np.minimum.reduceat(nbytes, g_starts)
-            g_url = url_arr[g_starts]
-            g_codes = url_codes[g_starts]
-            g_bucket = bucket[g_starts]
-            # series (per-url) boundaries over the grouped arrays
-            s_change = np.zeros(len(g_starts), dtype=bool)
-            s_change[0] = True
-            s_change[1:] = g_codes[1:] != g_codes[:-1]
-            s_starts = np.flatnonzero(s_change)
-            s_lens = np.diff(np.append(s_starts, len(g_starts)))
-            reps = (s_lens + chunk_rows - 1) // chunk_rows
-            p_series = np.repeat(np.arange(len(s_starts)), reps)
-            p_ord = np.arange(int(reps.sum()), dtype=np.int64) - np.repeat(
-                np.concatenate([[0], np.cumsum(reps)[:-1]]), reps
-            )
-            p_starts = s_starts[p_series] + p_ord * chunk_rows
-            p_lens = np.minimum(chunk_rows, s_lens[p_series] - p_ord * chunk_rows)
-            n_pieces = len(p_starts)
-            ts_blobs = sz.encode_batch_concat(g_bucket, p_lens, "doubledelta", False)
-            raws = p_lens * 8
-            comps = np.fromiter((len(b) for b in ts_blobs), np.int64, n_pieces)
-            out = pd.DataFrame(
-                {
-                    "tier": tier,
-                    "part": part,
-                    ("url_id" if shuffle_ids else "url"): g_url[p_starts],
-                    "chunk": p_ord,
-                    "start_bucket": g_bucket[p_starts].view("datetime64[us]"),
-                    "end_bucket": g_bucket[p_starts + p_lens - 1].view("datetime64[us]"),
-                    "n": p_lens,
-                    "ts_blob": ts_blobs,
-                }
-            )
-            crc_frags = [""] * n_pieces
-            if with_crc:
-                for i in range(n_pieces):
-                    sl = slice(p_starts[i], p_starts[i] + p_lens[i])
-                    crc_frags[i] = (
-                        ', "crc": {"ts": %d, "crawl_count": %d, "byte_size_sum": %d,'
-                        ' "byte_size_max": %d, "byte_size_min": %d}'
-                        % (
-                            zlib.crc32(g_bucket[sl].tobytes()),
-                            zlib.crc32(counts[sl].tobytes()),
-                            zlib.crc32(sums[sl].tobytes()),
-                            zlib.crc32(maxs[sl].tobytes()),
-                            zlib.crc32(mins[sl].tobytes()),
-                        )
-                    )
-            meas_frags: dict[str, list] = {}
-            for name, arr in (
-                ("crawl_count", counts),
-                ("byte_size_sum", sums),
-                ("byte_size_max", maxs),
-                ("byte_size_min", mins),
-            ):
-                blobs, metas = _encode_measure(arr, p_starts, p_lens, codec)
-                out[f"blob_{name}"] = blobs
-                meas_frags[name] = [_meta_frag(m) for m in metas]
-                raws = raws + 8 * p_lens
-                comps = comps + np.fromiter((len(b) for b in blobs), np.int64, n_pieces)
-            cc, bs, bx, bn = (
-                meas_frags["crawl_count"], meas_frags["byte_size_sum"],
-                meas_frags["byte_size_max"], meas_frags["byte_size_min"],
-            )
-            out["meta"] = [
-                '{"ts": {"codec": "sprintz", "mode": "doubledelta"}%s,'
-                ' "crawl_count": %s, "byte_size_sum": %s, "byte_size_max": %s,'
-                ' "byte_size_min": %s}' % (crc_frags[i], cc[i], bs[i], bx[i], bn[i])
-                for i in range(n_pieces)
-            ]
-            out["raw_bytes"] = raws
-            out["comp_bytes"] = comps
-            frames.append(out)
-        res = pd.concat(frames, ignore_index=True)
-        res["encode_secs"] = (time.perf_counter() - t0) / max(len(res), 1)
-        return res[out_cols]
+        return _encode_part(pdf, tiers, codec, chunk_rows, with_crc, shuffle_ids)
 
     if "nbytes" in pages.columns:
         # silver input (ingest_silver output): nbytes was projected from

@@ -1,12 +1,17 @@
 """The fused single-shuffle job must produce bit-identical tier values to
 the modular retention plan, for both codec settings."""
 
+import json
+import zlib
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from sprintz_spark.codecs import sprintz as sz
 from sprintz_spark.operators import rollup as R
+from sprintz_spark.operators.encode import decode_value_columns_batch
+from sprintz_spark.plans import jobs
 from sprintz_spark.plans.jobs import decode_fused_tier, fused_rollup_encode
 
 
@@ -142,3 +147,154 @@ def test_verify_encoded_names_the_corrupt_chunk(fused_store):
     assert "ValueError: byte_size_sum:" in msg
     chunk = ", ".join(f"{c}={row[c]}" for c in key)
     assert f"in chunk ({chunk})" in msg
+
+
+# ---- _encode_part without Spark: one silver part's pandas frame ----
+
+TIERS = ("1m", "1h", "1d")
+T0 = np.datetime64("2024-03-01T00:00:00", "us").astype(np.int64)
+
+
+def _part_frame(shuffle_ids=False):
+    """One part whose urls give FIRE pieces of every width: small spans
+    (u8), spans up to 50k (u16), a +-2^40 span (64-bit), negative
+    nbytes, and a url with a single row (a one-row group in every
+    tier). Rows are shuffled: the encoder sorts them itself."""
+    rng = np.random.default_rng(17)
+    series = {  # url: (rows, step in minutes, nbytes)
+        "https://a.example/u8": (20, 7, rng.integers(100, 200, 20)),
+        "https://b.example/u16": (30, 61, rng.integers(0, 50_000, 30)),
+        "https://c.example/wide": (18, 150, rng.integers(-(1 << 40), 1 << 40, 18)),
+        "https://d.example/neg": (25, 23, rng.integers(-300, -100, 25)),
+        "https://e.example/one": (1, 1, np.array([-5])),
+    }
+    rows = []
+    for url, (n, step, nbytes) in series.items():
+        minutes = np.cumsum(rng.integers(1, 2 * step, n))
+        for m, b in zip(minutes, nbytes):
+            rows.append((url, T0 + int(m) * 60_000_000 + int(rng.integers(0, 60_000_000)), int(b)))
+    pdf = pd.DataFrame(rows, columns=["url", "ts", "nbytes"]).sample(frac=1, random_state=3)
+    pdf = pd.DataFrame(
+        {
+            "url": pdf["url"].to_numpy(),
+            "warc_ts": pdf["ts"].to_numpy().view("datetime64[us]"),
+            "nbytes": pdf["nbytes"].to_numpy(np.int64),
+            "part": 5,
+        }
+    )
+    if shuffle_ids:
+        pdf.insert(0, "url_id", pd.factorize(pdf["url"])[0].astype(np.int64) * 7919 - 11)
+        pdf = pdf.drop(columns="url")
+    return pdf.reset_index(drop=True)
+
+
+def _expected_pieces(pdf, chunk_rows, shuffle_ids):
+    """(tier, url, chunk, bucket, measures) per piece in the fused job's
+    row order: tier-major, then url (first appearance, or id order for
+    url ids), then chunk; each tier's (url, bucket) aggregates from
+    pandas."""
+    url_col = "url_id" if shuffle_ids else "url"
+    urls = pdf[url_col].unique()
+    urls = np.sort(urls) if shuffle_ids else urls
+    ts = pdf["warc_ts"].to_numpy().view(np.int64)
+    out = []
+    for tier in TIERS:
+        step = jobs.TIER_US[tier]
+        g = (
+            pd.DataFrame({"url": pdf[url_col], "bucket": ts - ts % step, "nbytes": pdf["nbytes"]})
+            .groupby(["url", "bucket"], sort=True)["nbytes"]
+            .agg(["size", "sum", "max", "min"])
+            .reset_index()
+        )
+        for url in urls:
+            s = g[g["url"] == url]
+            for c, lo in enumerate(range(0, len(s), chunk_rows)):
+                piece = s.iloc[lo : lo + chunk_rows]
+                meas = [piece[k].to_numpy(np.int64) for k in ("size", "sum", "max", "min")]
+                out.append((tier, url, c, piece["bucket"].to_numpy(np.int64), meas))
+    return out
+
+
+@pytest.mark.parametrize("shuffle_ids", [False, True])
+@pytest.mark.parametrize("codec", ["fire", "auto"])
+def test_encode_part_matches_pieces_encoded_alone(codec, shuffle_ids):
+    """Stacking every tier and measure into one batch must not change a
+    byte: each piece's blobs equal that piece encoded as a batch of one,
+    and meta, n, raw/comp bytes and the row order follow the per-piece
+    formulas."""
+    chunk_rows = 7
+    pdf = _part_frame(shuffle_ids)
+    got = jobs._encode_part(pdf, TIERS, codec, chunk_rows, True, shuffle_ids)
+    url_col = "url_id" if shuffle_ids else "url"
+    assert list(got.columns) == (jobs._COLS_ID if shuffle_ids else jobs._COLS)
+    want = _expected_pieces(pdf, chunk_rows, shuffle_ids)
+    assert len(got) == len(want)
+    assert max(len(w[3]) for w in want) == chunk_rows  # series do split
+    widths = set()
+    for r, (tier, url, chunk, bucket, meas) in zip(got.itertuples(index=False), want):
+        r = r._asdict()
+        n = len(bucket)
+        assert (r["tier"], r["part"], r[url_col], r["chunk"], r["n"]) == (tier, 5, url, chunk, n)
+        assert r["start_bucket"] == pd.Timestamp(bucket[0], unit="us")
+        assert r["end_bucket"] == pd.Timestamp(bucket[-1], unit="us")
+        assert r["ts_blob"] == sz.encode_batch_concat(bucket, [n], "doubledelta", False)[0]
+        meta = json.loads(r["meta"])
+        assert meta["ts"] == {"codec": "sprintz", "mode": "doubledelta"}
+        assert meta["crc"]["ts"] == zlib.crc32(bucket.tobytes())
+        comp = len(r["ts_blob"])
+        for name, vals in zip(jobs.MEASURES, meas):
+            blob = r[f"blob_{name}"]
+            alone, alone_meta = jobs._encode_measure(vals, np.array([0]), np.array([n]), codec)
+            assert blob == alone[0], (tier, url, chunk, name)
+            assert meta[name] == json.loads(alone_meta[0])
+            assert meta["crc"][name] == zlib.crc32(vals.tobytes())
+            if codec == "fire" and int(vals.max()) - int(vals.min()) <= 0xFFFF:
+                w = 8 if int(vals.max()) - int(vals.min()) <= 0xFF else 16
+                assert meta[name] == {
+                    "codec": "sprintz", "mode": "fire",
+                    "np_dtype": f"uint{w}", "offset": int(vals.min()),
+                }
+            else:
+                assert meta[name] == {
+                    "codec": "sprintz", "mode": sz.blob_mode(blob), "np_dtype": "int64"
+                }
+            widths.add(meta[name]["np_dtype"])
+            dec = decode_value_columns_batch([blob], [meta[name]])[0]
+            np.testing.assert_array_equal(np.asarray(dec).astype(np.int64), vals)
+            comp += len(blob)
+        assert r["raw_bytes"] == 8 * 5 * n
+        assert r["comp_bytes"] == comp
+    if codec == "fire":
+        assert widths == {"uint8", "uint16", "int64"}
+
+
+@pytest.mark.parametrize("rows", [0, 1])
+def test_encode_part_empty_and_one_row(rows):
+    pdf = _part_frame().iloc[:rows]
+    got = jobs._encode_part(pdf, TIERS, "fire", 7, True, False)
+    assert list(got.columns) == jobs._COLS
+    assert list(got["tier"]) == (list(TIERS) if rows else [])
+    assert (got["n"] == 1).all()
+
+
+def test_encode_part_one_kernel_call_per_width(monkeypatch):
+    """The whole part takes one doubledelta call for the timestamps and
+    at most one FIRE call per narrow width plus one 64-bit call for the
+    measures, however many tiers and measures it holds."""
+    fire_widths, concat_modes = [], []
+    fire, concat = sz.encode_batch_concat_fire, sz.encode_batch_concat
+
+    def counting_fire(values, lengths, deflate=True):
+        fire_widths.append(np.asarray(values).dtype.itemsize * 8)
+        return fire(values, lengths, deflate)
+
+    def counting_concat(values, lengths, mode=None, deflate=True):
+        concat_modes.append(mode)
+        return concat(values, lengths, mode, deflate)
+
+    monkeypatch.setattr(sz, "encode_batch_concat_fire", counting_fire)
+    monkeypatch.setattr(sz, "encode_batch_concat", counting_concat)
+    got = jobs._encode_part(_part_frame(), TIERS, "fire", 7, True, False)
+    assert set(got["tier"]) == set(TIERS)
+    assert sorted(fire_widths) == [8, 16]
+    assert sorted(concat_modes, key=str) == [None, "doubledelta"]
